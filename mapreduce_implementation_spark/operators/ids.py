@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_implementation_spark.session import batch_shuffle_partitions
+
 
 def assign_contiguous_ids(
     df: DataFrame,
@@ -54,6 +56,8 @@ def assign_contiguous_ids(
     ``order_by`` ordering. ``order_by`` must be a unique (composite)
     key — with duplicates the ids are still contiguous and unique but
     the order among equal keys is partition-dependent.
+    ``num_partitions`` (the range-partition count) defaults to the
+    session's batch shuffle width (session.batch_shuffle_partitions).
 
     ``barrier`` selects the materialization barrier durability
     (operators/barrier.py): ``"local"`` = executor block storage —
@@ -70,9 +74,7 @@ def assign_contiguous_ids(
     cols = [order_by] if isinstance(order_by, str) else list(order_by)
     if not cols:
         raise ValueError("order_by must name at least one column")
-    p = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    p = num_partitions or batch_shuffle_partitions(df.sparkSession)
     key_cols: list[Column] = [F.col(c) for c in cols]
     # monotonically_increasing_id on the range-partitioned, locally
     # sorted frame encodes (partition_id << 33) | local_rank — the

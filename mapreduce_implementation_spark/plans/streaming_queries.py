@@ -2,11 +2,12 @@
 
 Each entry runs a REAL Structured Streaming pipeline (file source →
 stateful transformation → memory sink), drains it with
-``processAllAvailable()``, and returns the sink table as the result
-DataFrame. Because the whole sf table arrives as one micro-batch, the
-results are deterministic and — for these queries — EXACTLY match a
-batch twin, so they get full DuckDB oracles rather than the weaker
-rows-only check:
+``Trigger.AvailableNow`` (``run_available_now``: the query processes
+everything the source holds, then terminates), and returns the sink
+table as the result DataFrame. Because the whole sf table arrives as
+one micro-batch, the results are deterministic and — for these
+queries — EXACTLY match a batch twin, so they get full DuckDB oracles
+rather than the weaker rows-only check:
 
 * streaming wordcount (complete mode): running counts after one batch ≡
   batch wordcount (same tokens/filter as plans/text_queries.wordcount).

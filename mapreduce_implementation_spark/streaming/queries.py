@@ -10,7 +10,9 @@ InputSplit.
 Scale notes: stateful aggs (windowed counts, streaming wordcount) keep
 state per key in the state store — bounded by |vocab| / |windows×types|,
 with watermarks evicting expired windows. Shuffle behavior is identical
-to batch (hash partition on the group key).
+to batch (hash partition on the group key), but at the session's
+non-adaptive width: one state store per ``spark.sql.shuffle.partitions``
+partition, fixed for the life of the checkpoint (session.py).
 """
 
 from __future__ import annotations
@@ -225,20 +227,28 @@ def run_available_now(df: DataFrame, name: str, output_mode: str = "complete"):
     and TERMINATE (Trigger.AvailableNow) — the bounded-drain harness
     that is safe for every stateful operator, including
     ProcessingTimeTimeout ones. Returns the stopped query; results are
-    in the memory table ``name``."""
+    in the memory table ``name``. The checkpoint is private to the call
+    (the query cannot be resumed), so it is removed once the query
+    ends, whether it finished or failed."""
+    import shutil
     import tempfile
 
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    try:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
         )
-        .start()
-    )
-    q.awaitTermination()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return q
 
 

@@ -102,3 +102,25 @@ def test_ids_unknown_barrier_raises(spark):
     df = spark.range(10).select(F.col("id").alias("k"))
     with pytest.raises(ValueError, match="barrier mode"):
         assign_contiguous_ids(df, "k", barrier="flaky").collect()
+
+
+def test_ids_range_partitions_follow_batch_width(spark):
+    """The range-partition count defaults to the BATCH shuffle width
+    (the AQE initial partition number), not the non-adaptive
+    ``spark.sql.shuffle.partitions`` that sizes stateful streaming, so
+    a session whose two widths differ keeps the batch id layout."""
+    from mapreduce_implementation_spark.session import (
+        batch_shuffle_partitions,
+    )
+
+    width = batch_shuffle_partitions(spark)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width // 2 + 1))
+    try:
+        out = assign_contiguous_ids(
+            spark.range(2_000).select(F.col("id").alias("k")), "k"
+        )
+        assert out.rdd.getNumPartitions() == width
+        assert sorted(r.row_id for r in out.collect()) == list(range(2_000))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

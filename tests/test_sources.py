@@ -462,6 +462,14 @@ def test_ensure_table_write_sizing_expanding(spark, tmp_path):
     )
     assert _plan_has_generator(exploding)
     assert not _plan_has_generator(base.selectExpr("id", "v + 1 AS w"))
+    # a Generate inside a scalar subquery is an expression's plan, not
+    # a child of the outer plan; the walk must visit it too
+    base.createOrReplaceTempView("xsrc_gen")
+    in_subquery = spark.sql(
+        "SELECT id, v FROM xsrc_gen WHERE v <= (SELECT max(pos) FROM "
+        "(SELECT explode(sequence(0, id)) AS pos FROM xsrc_gen))"
+    )
+    assert _plan_has_generator(in_subquery)
     sized = _sized_for_write(exploding)
     # rebalance fallback, not a byte-derived repartition(1)
     assert "rebalance" in sized._jdf.queryExecution().logical().toString().lower()

@@ -354,3 +354,78 @@ def test_rocksdb_state_store_runs_stateful_query(spark, stream_dir):
         .collect()
     }
     assert got == want and got
+
+
+def test_run_available_now_removes_its_checkpoint(spark, stream_dir, monkeypatch):
+    """The drain's checkpoint is private to the call, so the drain
+    deletes it once the query has ended; kept, every drain would leave
+    one ``ckpt_*`` directory in the temp dir."""
+    import tempfile
+
+    from mapreduce_implementation_spark.streaming.queries import (
+        run_available_now,
+    )
+
+    made: list[str] = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    _feed(f"{SF}/documents.parquet", stream_dir, "b0.parquet")
+    q = run_available_now(
+        streaming_wordcount(read_documents_stream(spark, stream_dir)),
+        "wc_ckpt_cleanup",
+    )
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] > 0
+    assert spark.table("wc_ckpt_cleanup").count() > 0
+    ckpts = [d for d in made if os.path.basename(d).startswith("ckpt_")]
+    assert len(ckpts) == 1, made
+    assert not os.path.exists(ckpts[0])
+
+
+def test_stateful_restart_keeps_checkpoint_shuffle_width(
+    spark, stream_dir, tmp_path
+):
+    """A stateful checkpoint written at one ``spark.sql.shuffle.partitions``
+    restarts under a session set to another: Spark reads the state
+    width from the checkpoint's offset log, so the restarted query keeps
+    the original count and its running counts stay exact. Checkpoints
+    written before the session's default width changed rely on this."""
+    ckpt = str(tmp_path / "ckpt")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def drain(width: int):
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        q = (
+            streaming_wordcount(read_documents_stream(spark, stream_dir))
+            .writeStream.format("memory")
+            .queryName("wc_restart_width")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+
+    try:
+        _feed(f"{SF}/documents.parquet", stream_dir, "b0.parquet")
+        first = drain(3)
+        _feed(f"{SF}/documents.parquet", stream_dir, "b1.parquet")
+        second = drain(5)
+        got = {
+            r.word: r["count"]
+            for r in spark.table("wc_restart_width").collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    for q in (first, second):
+        assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3
+    batch = {
+        r.word: r.cnt for r in all_queries()["wordcount"].fn(spark, SF).collect()
+    }
+    # the same documents arrived twice: every running count doubles
+    assert got == {w: 2 * n for w, n in batch.items()} and got
